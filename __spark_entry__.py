@@ -1195,8 +1195,7 @@ def _minhash_oracle_sql(cfg=CFG, table: str = "documents") -> str:
          documented 2⁻⁶⁴ hash-collision caveat), star edges
          (min-id rep → member) within each group, then all-pairs among
          reps for buckets ≤ 16·hot_bucket_threshold distinct
-         signatures (the salted medium regime emits the same pair SET
-         as plain all-pairs) and star-around-bmin above —
+         signatures and star-around-bmin above —
          minhash_lsh.candidate_pairs_from_buckets.
       5. estimate prefilter: signature lane agreement ≥ t − 3σ.
       6. exact verify: true k-shingle Jaccard ≥ t, computed over

@@ -209,7 +209,7 @@ runs at ~40 MB/s under load).  On a real multi-executor cluster each
 executor contributes its own memory bus, page cache, shuffle disks
 and Python worker pool, so the shuffle stages regain the parallelism
 they lose here.  The per-stage evidence (exact/minhash/simhash/
-substring shuffles keyed and partial-aggregated, hot keys salted or
+substring shuffles keyed and partial-aggregated, hot keys collapsed or
 starred, AQE skew-join on) is in the plan-audit tests
 (tests/test_plans.py) and operator docstrings.
 

@@ -39,14 +39,11 @@ class DedupConfig:
     min_substring_len: int = 32   # L: shared verbatim run to count as dup
 
     # --- Candidate-pair generation / skew (§7 step 6) ---
-    # (a bucket_pair_cap knob existed through r3 but was never read:
-    # the salted/star regimes below bound per-bucket pair volume by
-    # construction — small buckets emit ≤ salt_floor² pairs, medium
-    # ones fan out across salt_buckets partitions, hot ones emit O(k)
-    # star edges — so a separate silent drop-cap is redundant and was
-    # removed rather than wired in, per VERDICT r3 "what's wrong" #1.)
-    salt_buckets: int = 16        # salt fan-out for hot band keys
-    hot_bucket_threshold: int = 64  # bucket size above which we salt
+    # Per-bucket pair volume is bounded by construction: a bucket of
+    # ≤ 16·hot distinct payload values emits all pairs among them, a
+    # larger one O(k) star edges around its min representative
+    # (minhash_lsh.candidate_pairs_from_buckets).
+    hot_bucket_threshold: int = 64
 
     # --- Connected components (§7 step 7) ---
     cc_max_iterations: int = 25

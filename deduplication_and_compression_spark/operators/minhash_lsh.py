@@ -20,9 +20,9 @@ Dataflow (all sizes are per 10^12-row scale reasoning):
   4. pair-gen     skew-aware: identical-payload members collapse to a
                   min-id representative first (the exact-dup flood —
                   THE hot-bucket case at web scale — becomes O(k) star
-                  edges that verification can never sever), then
-                  all-pairs / salted all-pairs / star-over-reps by
-                  DISTINCT-payload bucket size
+                  edges that verification can never sever), then one
+                  hub join emits all-pairs among reps, or star-over-reps
+                  above 16·hot DISTINCT payloads per bucket
   5. verify       candidates joined back to captions; TRUE shingle
                   Jaccard computed in an Arrow-batched UDF; edge iff
                   J ≥ cfg.jaccard_threshold (false positives from LSH
@@ -32,7 +32,7 @@ Dataflow (all sizes are per 10^12-row scale reasoning):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions import hashing as H
@@ -136,14 +136,14 @@ def band_keys(sig_df: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame
 def candidate_pairs_from_buckets(
     bucketed: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    key_cols: tuple[str, ...] = ("band_idx", "band_hash"),
-    val_col: str | None = None,
+    val_col: str = "_vhash",
 ) -> DataFrame:
-    """Generic skew-aware bucket → candidate (a,b) pair generation.
+    """Generic skew-aware bucket → candidate (a,b) pair generation over
+    (id, band_idx, band_hash, ``val_col``) rows.
 
     Used by the LSH, SimHash and substring tiers.
 
-    Step 1 — VALUE COLLAPSE (when ``val_col`` names a full-payload hash
+    Step 1 — VALUE COLLAPSE (``val_col`` names a full-payload hash
     column, e.g. the phash itself or xxhash64 of the signature/text):
     members of a bucket with identical payloads are collapsed to their
     min-id representative, emitting (rep, member) star edges.  Those
@@ -166,21 +166,18 @@ def candidate_pairs_from_buckets(
     bucket-shuffle-affordable (≤ 8 bytes); hash proxies are for wide
     payloads only.
 
-    Step 2 — three regimes over the (collapsed) representatives, by
-    distinct-value bucket size k (north_rule: "salted-shuffle
-    candidate-pair generation ... skew handled explicitly"):
+    Step 2 — ONE hub join over the (collapsed) representatives.  Each
+    rep is tagged with its bucket's distinct-value size k and min rep
+    by one window; a rep is a HUB when k ≤ hot = 16·hot_bucket_threshold
+    or it is the bucket's min rep.  Joining hubs to reps on the bucket
+    key (a < b) yields, by k:
 
-      k ≤ salt_floor            plain self-join on the bucket key —
-                                 uniform small buckets, no skew
-      salt_floor < k ≤ hot      SALTED self-join: the left side gets
-                                 salt = xxhash64(id) % s, the right
-                                 side is exploded to every salt value,
-                                 so one medium-hot bucket fans out to s
-                                 shuffle partitions instead of one
-                                 straggler task (s = cfg.salt_buckets);
-                                 every pair still appears exactly once
-      k > hot                    star pairs around the bucket's min rep:
-                                 O(k) instead of O(k²)
+      k ≤ hot    every rep is a hub → all pairs among reps, each once
+      k > hot    the min rep is the only hub → star pairs around it:
+                 O(k) instead of O(k²)
+
+    A hot bucket has one hub, so its join work stays O(k); AQE
+    skew-join spreads any residual straggler partition.
 
     Exactness: any true pair (x, y) sharing a bucket is connected
     through emitted verified edges — x–rep(x) and y–rep(y) at distance
@@ -189,86 +186,50 @@ def candidate_pairs_from_buckets(
     ``16 * hot_bucket_threshold`` DISTINCT payload values.  Beyond that the
     star-over-reps regime is a documented approximation: an edge
     (min-rep, r) with distance > threshold is dropped by verification
-    and can sever r's members from the bucket's component.  Without
-    ``val_col`` the collapse is skipped and the regimes apply to raw
-    members (the pre-collapse behavior — approximate for ANY hot
-    bucket, not just payload-diverse ones).
+    and can sever r's members from the bucket's component.
 
-    AQE skew-join mops up residual imbalance in the size-tag join.
+    One pair can share several buckets (bands, pigeonhole keys), so the
+    union of cross-rep and intra-group pairs is deduplicated.
     """
-    keys = [F.col(c) for c in key_cols]
-
-    if val_col is not None:
-        # collapse via groupBy, NOT a window: the partial (map-side)
-        # aggregation shrinks an exact-dup flood BEFORE it shuffles —
-        # a window sort would shuffle every member row.  The group
-        # table is tiny on flood-heavy data, so Catalyst/AQE turns the
-        # member-tag join into a broadcast; persist() because intra
-        # and the three regimes both consume it.
-        grp = scoped_persist(
-            bucketed.groupBy(*key_cols, val_col)
-            .agg(F.min("id").alias("_rep"), F.count(F.lit(1)).alias("_gsz"))
-        )
-        # star edges inside each identical-payload group (rep = min id,
-        # so rep < id always: pairs are already (a<b)-normalized); only
-        # multi-member groups need their members tagged at all
-        multi = grp.filter(F.col("_gsz") > 1).select(*key_cols, val_col, "_rep")
-        intra = (
-            bucketed.join(multi, list(key_cols) + [val_col])
-            .where(F.col("id") != F.col("_rep"))
-            .select(F.col("_rep").alias("a"), F.col("id").alias("b"))
-        )
-        reps = grp.select(*key_cols, F.col("_rep").alias("id"))
-    else:
-        intra = None
-        reps = bucketed.select(*key_cols, "id")
-
-    sizes = reps.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("_bsz"), F.min("id").alias("_bmin")
-    ).filter(F.col("_bsz") > 1)
-
-    tagged = reps.join(sizes, list(key_cols))
-    salt_floor = max(2, cfg.hot_bucket_threshold // 4)
-    s = cfg.salt_buckets
-    # With the collapse active, "bucket size" counts DISTINCT payloads,
-    # so the star fallback can afford a much higher floor: a k-rep
-    # salted all-pairs emits ≤ k²/2 bounded pairs, and real skew
-    # (floods) has already collapsed away.  16x the raw threshold keeps
-    # the exactness guarantee through e.g. 1024-distinct-value buckets
-    # while still refusing adversarial quadratic blowups.
-    hot = cfg.hot_bucket_threshold * (16 if val_col is not None else 1)
-
-    small = tagged.filter(F.col("_bsz") <= salt_floor)
-    left = small.select(*keys, F.col("id").alias("a"))
-    right = small.select(*keys, F.col("id").alias("b"))
-    small_pairs = left.join(right, list(key_cols)).filter(F.col("a") < F.col("b"))
-
-    medium = tagged.filter(
-        (F.col("_bsz") > salt_floor) & (F.col("_bsz") <= hot)
+    key_cols = ["band_idx", "band_hash"]
+    # collapse via groupBy, NOT a window: the partial (map-side)
+    # aggregation shrinks an exact-dup flood BEFORE it shuffles — a
+    # window sort would shuffle every member row.  The group table is
+    # tiny on flood-heavy data, so Catalyst/AQE turns the member-tag
+    # join into a broadcast; persist() because intra and the hub join
+    # both consume it.
+    grp = scoped_persist(
+        bucketed.groupBy(*key_cols, val_col)
+        .agg(F.min("id").alias("_rep"), F.count(F.lit(1)).alias("_gsz"))
     )
-    m_left = medium.select(
-        *keys, F.col("id").alias("a"), F.pmod(F.xxhash64("id"), F.lit(s)).alias("_salt")
-    )
-    m_right = medium.select(
-        *keys, F.col("id").alias("b"),
-        F.explode(F.sequence(F.lit(0).cast("long"), F.lit(s - 1).cast("long"))).alias("_salt"),
-    )
-    medium_pairs = m_left.join(m_right, list(key_cols) + ["_salt"]).filter(
-        F.col("a") < F.col("b")
+    # star edges inside each identical-payload group (rep = min id, so
+    # rep < id always: pairs are already (a<b)-normalized); only
+    # multi-member groups need their members tagged at all
+    multi = grp.filter(F.col("_gsz") > 1).select(*key_cols, val_col, "_rep")
+    intra = (
+        bucketed.join(multi, key_cols + [val_col])
+        .where(F.col("id") != F.col("_rep"))
+        .select(F.col("_rep").alias("a"), F.col("id").alias("b"))
     )
 
-    hot_pairs = (
-        tagged.filter(
-            (F.col("_bsz") > hot) & (F.col("id") != F.col("_bmin"))
-        )
-        .select(
-            F.least("id", "_bmin").alias("a"), F.greatest("id", "_bmin").alias("b")
-        )
+    bucket = Window.partitionBy(*key_cols)
+    reps = grp.select(
+        *key_cols,
+        F.col("_rep").alias("id"),
+        F.count(F.lit(1)).over(bucket).alias("_bsz"),
+        F.min("_rep").over(bucket).alias("_bmin"),
     )
-    out = small_pairs.select("a", "b").union(medium_pairs.select("a", "b")).union(hot_pairs)
-    if intra is not None:
-        out = out.union(intra)
-    return out.dropDuplicates(["a", "b"])
+    hot = 16 * cfg.hot_bucket_threshold
+    hubs = reps.where((F.col("_bsz") <= hot) | (F.col("id") == F.col("_bmin")))
+    # reps stream and hubs are the build (broadcast or sort-merge
+    # buffered) side: a hot bucket builds its one hub, not its k reps.
+    cross = (
+        reps.select(*key_cols, F.col("id").alias("b"))
+        .join(hubs.select(*key_cols, F.col("id").alias("a")), key_cols)
+        .where(F.col("a") < F.col("b"))
+        .select("a", "b")
+    )
+    return cross.union(intra).dropDuplicates(["a", "b"])
 
 
 # candidate rows per Python-verify task: small enough that a bench-
@@ -350,9 +311,9 @@ def minhash_pairs(
 
     Pass a pre-materialized ``sigs`` (e.g. a checkpoint table) to avoid
     recomputing the signature UDF in each branch of the candidate
-    generator — the plan reuses the bucket table three times (size agg,
-    tag join, hot filter), and an un-materialized UDF upstream would
-    run three times.
+    generator — the plan reads the bucket table twice (the value-collapse
+    aggregate ``grp`` and the intra-group join ``intra``), and an
+    un-materialized UDF upstream would run twice.
     """
     if sigs is None:
         sigs = scoped_persist(minhash_signatures(df, cfg, id_col, text_col))

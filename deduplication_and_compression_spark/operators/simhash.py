@@ -160,15 +160,15 @@ def phash_hamming_pairs(
     ≤d pair is connected through emitted verified edges: pigeonhole
     guarantees bucket sharing, identical phashes star around a
     distance-0 representative that verification can never sever, and
-    distinct-value representatives go through all-pairs/salted
-    regimes.  The only approximation is a bucket with more than
+    distinct-value representatives go through all-pairs.  The only
+    approximation is a bucket with more than
     16*cfg.hot_bucket_threshold DISTINCT phash values (star-over-reps;
     rep edges > d apart are dropped there — see
     candidate_pairs_from_buckets).  False positives pruned by
     verify_hamming.
     """
-    # materialize: the candidate generator consumes the key table in
-    # three branches; without this the keying explode runs three times
+    # materialize: the candidate generator reads the key table twice
+    # (grp and intra); without this the keying explode runs twice
     keys = scoped_persist(hamming_block_keys(df, cfg, id_col, hash_col, scheme, n_rows))
     cands = candidate_pairs_from_buckets(keys, cfg, val_col="_vhash")
     return verify_hamming(cands, df, cfg, id_col, hash_col)

@@ -264,7 +264,7 @@ LAST_PLAN_PICK: dict | None = None
 # (931 vocab / 5000 docs / Σdf² = 73.2M) gives allpairs 3.2s vs
 # ppjoin 11.7s — allpairs wins its regime by 3.6×, the r4 flip was
 # host-load drift, and both discriminator rules still route to the
-# measured-faster plan (scripts/pin_jaccard_plans.py reproduces this).
+# measured-faster plan (bench.py records the pick as jaccard_plan_picks).
 # On a real cluster this constant only shrinks relative to the data,
 # so at 10^12-row scale the pick degenerates to "ppjoin whenever a
 # rare tail exists" — exactly the published PPJoin guidance.

@@ -10,7 +10,7 @@ highest-confidence-wins priority election (pairs.union_pairs).
 Scale shape is inherited tier by tier: exact is a star-shaped
 pair-with-representative over a content-hash groupBy, MinHash/SimHash/
 substring all go through the shared skew-aware bucket candidate
-generator (value collapse, salting, star-over-reps), and the union is
+generator (value collapse, one hub join, star-over-reps), and the union is
 a partial aggregation — no stage here is new physical work, only the
 composition is.
 """

@@ -124,7 +124,7 @@ def _warmup_async(spark: SparkSession) -> None:
             from pyspark import inheritable_thread_target
             from pyspark.sql import Window, functions as F
 
-            @inheritable_thread_target
+            @inheritable_thread_target(spark)
             def _go() -> None:
                 spark.sparkContext.setJobDescription("session warmup")
                 # codegen + shuffle + agg + broadcast-join + window

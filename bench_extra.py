@@ -1,13 +1,13 @@
 #!/usr/bin/env python
 """Optimization-round measurement harness (guide §1) — NOT the driver
 bench.  bench.py is frozen for measurement; this file exists so the
-round's before/after evidence (noop-sink isolation, .explain capture,
-per-stage pipeline walls) never touches it.
+round's before/after evidence (noop-sink isolation, .explain capture)
+never touches it.  Per-stage pipeline walls are in the ``metrics``
+table every ``run_pipeline`` call writes under its output directory.
 
 Modes:
   python bench_extra.py plans <outdir>   # .explain("formatted") per query
   python bench_extra.py time [names...]  # noop-sink best-of-N per query
-  python bench_extra.py stages           # image-pipeline per-stage walls
 
 The noop sink computes every column of every row and discards it
 (guide §1.4), so these walls time the computation, not the sink or the
@@ -18,9 +18,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 from contextlib import redirect_stdout
 from io import StringIO
@@ -62,7 +60,6 @@ def _raw_builders(spark):
         connected_components,
     )
     from deduplication_and_compression_spark.persistence import scoped_persist
-    from pyspark.sql import functions as F
 
     docs = lambda: E._docs(spark, SF_DIR)
     embs = lambda: E._embs(spark, SF_DIR)
@@ -197,49 +194,11 @@ def cmd_time(names: list[str], repeats: int = 3) -> None:
     spark.stop()
 
 
-def cmd_stages(repeats: int = 2) -> None:
-    """Per-stage image-pipeline walls (the bench flagship), fixture and
-    methodology identical to bench.py's untimed-generation setup."""
-    from deduplication_and_compression_spark.fixtures.generator import (
-        write_fixture,
-    )
-    from deduplication_and_compression_spark.plans.pipeline import run_pipeline
-
-    sf = float(Path(SF_DIR).name.replace("sf", "") or 0.1)
-    n_images = max(1000, int(round(200_000 * sf)))
-    cache = Path(
-        os.environ.get("SPARK_GRAFT_BENCH_CACHE", str(REPO / ".bench_cache"))
-    ) / f"images_{n_images}_seed42_{CFG.fingerprint()}"
-    img_path, _ = write_fixture(cache, n_images, seed=42, cfg=CFG)
-    spark = _spark()
-    images = spark.read.parquet(str(img_path))
-    images = images.repartition(max(CPUS, 8)).cache()
-    images.count()
-    for r in range(repeats):
-        workdir = tempfile.mkdtemp(prefix="dedup_extra_")
-        try:
-            t0 = time.perf_counter()
-            with persist_scope():
-                res = run_pipeline(spark, images, workdir, CFG, resume=False)
-            wall = round(time.perf_counter() - t0, 3)
-            stages = {
-                m["stage"]: round(m["wall_ms"] / 1000.0, 3)
-                for m in res.metrics if m["partition_id"] == -1
-            }
-            print(json.dumps({"run": r, "wall": wall, "stages": stages}),
-                  flush=True)
-        finally:
-            shutil.rmtree(workdir, ignore_errors=True)
-    spark.stop()
-
-
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     if mode == "plans":
         cmd_plans(sys.argv[2], sys.argv[3:])
     elif mode == "time":
         cmd_time(sys.argv[2:])
-    elif mode == "stages":
-        cmd_stages()
     else:
         raise SystemExit(f"unknown mode {mode!r}")

@@ -10,7 +10,9 @@ bytes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def assignments_from_labels(df: DataFrame, labels: DataFrame,
@@ -130,21 +132,25 @@ def elect_representatives(
     )
 
 
-def payload_bytes(df: DataFrame) -> DataFrame:
-    """(image_id, payload_bytes) = encoded image bytes + caption bytes."""
-    return df.select(
-        "image_id",
-        (
-            F.coalesce(F.length(F.col("bytes")), F.lit(0))
-            + F.coalesce(F.length(F.encode(F.col("caption"), "UTF-8")), F.lit(0))
-        ).cast("long").alias("payload_bytes"),
+def image_payload() -> Column:
+    """Encoded image bytes + UTF-8 caption bytes of an images row."""
+    return (
+        F.coalesce(F.length(F.col("bytes")), F.lit(0))
+        + F.coalesce(F.length(F.encode(F.col("caption"), "UTF-8")), F.lit(0))
     )
 
 
-def savings(assignments: DataFrame, payloads: DataFrame) -> DataFrame:
+def payload_bytes(df: DataFrame, id_col: str = "image_id",
+                  payload: Callable[[], Column] = image_payload) -> DataFrame:
+    """(id_col, payload_bytes): the bytes a duplicate avoids storing."""
+    return df.select(id_col, payload().cast("long").alias("payload_bytes"))
+
+
+def savings(assignments: DataFrame, payloads: DataFrame,
+            id_col: str = "image_id") -> DataFrame:
     """(cluster_id, members, bytes_total, bytes_saved) per cluster with
     ≥2 members.  bytes_saved = bytes_total - representative's bytes."""
-    joined = assignments.join(payloads, "image_id")
+    joined = assignments.join(payloads, id_col)
     return (
         joined.groupBy("cluster_id")
         .agg(
@@ -159,16 +165,18 @@ def savings(assignments: DataFrame, payloads: DataFrame) -> DataFrame:
     )
 
 
-def dedup_ratio(assignments: DataFrame, payloads: DataFrame) -> DataFrame:
+def dedup_ratio(assignments: DataFrame, payloads: DataFrame,
+                id_col: str = "image_id") -> DataFrame:
     """Global one-row accounting mirroring App/Host.cpp:507."""
-    joined = assignments.join(payloads, "image_id")
+    joined = assignments.join(payloads, id_col)
     return joined.agg(
         F.count(F.lit(1)).alias("rows_total"),
         F.sum(F.when(~F.col("is_duplicate"), 1).otherwise(0)).alias("rows_unique"),
         F.sum("payload_bytes").alias("bytes_total"),
         F.sum(F.when(~F.col("is_duplicate"), F.col("payload_bytes")).otherwise(0)).alias("bytes_after_dedup"),
-        (
+        # NULL, not an ANSI divide-by-zero error, when every payload is empty
+        F.try_divide(
             (F.sum("payload_bytes") - F.sum(F.when(~F.col("is_duplicate"), F.col("payload_bytes")).otherwise(0)))
-            * F.lit(100.0) / F.sum("payload_bytes")
+            * F.lit(100.0), F.sum("payload_bytes")
         ).alias("compression_pct"),
     )

@@ -1,22 +1,29 @@
-"""Pipeline orchestration: signature → candidates → pairs → components
+"""Pipeline orchestration for both CLI modes — an image+caption table
+and a document corpus: signature → candidates → pairs → components
 → assignments → savings, with per-stage checkpoint tables and resume.
 
-The reference's pipeline is compile-time-fixed thread topology
-(/root/reference/App/Host.cpp:254-340 spawning core_1/core_2); its only
-resumability is "re-run the whole stream".  Here every stage writes an
-idempotent checkpoint table (Iceberg when a catalog is configured;
-parquet fallback in this sandbox, see sources/tables.py) tagged with
-the config fingerprint, so any stage can resume mid-run
-(BASELINE.json north_rule) and a finished stage is never recomputed.
+The reference pushes every input through one host program and one
+detection chain (App/Host.cpp:254-340, Test/Testbench.cpp:81-123);
+here ``run_pipeline`` is that one chain, and an ``InputContract``
+(``IMAGES`` or ``DOCS``) names the columns its tiers and its
+accounting read.  ``tier_builders`` is the only place a tier is
+built: ``plans.docs.docs_tier_pairs`` reuses it without checkpoints.
+
+The reference's only resumability is "re-run the whole stream".  Here
+every stage writes an idempotent checkpoint table (Iceberg when a
+catalog is configured, parquet otherwise; see sources/tables.py)
+tagged with a resume key — config fingerprint, contract and tier set —
+so any stage can resume mid-run (BASELINE.json north_rule) and a
+finished stage is never recomputed.
 
 Metrics mirror the reference's per-stage stopwatch report
-(/root/reference/App/Host.cpp:500-543): per-stage wall_ms, rows_out,
-plus per-partition row counts (lineage) for the key stages.  Since r7
-the four tier stages run CONCURRENTLY (see run_pipeline), so a tier
-stage's wall_ms includes cross-tier contention — compare tier walls
-only against other concurrent runs, or use the pipeline wall; the
-post-union stages (cc_labels onward) remain sequential and their
-walls attribute cleanly.
+(App/Host.cpp:500-543): per-stage wall_ms, rows_out, plus
+per-partition row counts (lineage) for the key stages.  The tier
+stages run CONCURRENTLY (see run_pipeline), so a tier stage's wall_ms
+includes cross-tier contention — compare tier walls only against
+other concurrent runs, or use the pipeline wall; the post-union stages
+(cc_labels onward) remain sequential and their walls attribute
+cleanly.
 """
 
 from __future__ import annotations
@@ -27,21 +34,45 @@ from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..operators.assign import (
-    assignments_from_labels, dedup_ratio, payload_bytes, savings,
+    assignments_from_labels, dedup_ratio, image_payload, payload_bytes,
+    savings,
 )
 from ..operators.components import connected_components
 from ..operators.exact import exact_pairs
 from ..operators.minhash_lsh import minhash_pairs, minhash_signatures
 from ..operators.pairs import union_pairs
-from ..operators.simhash import phash_hamming_pairs
+from ..operators.simhash import phash_hamming_pairs, simhash_from_text
 from ..operators.substring import substring_pairs, winnow_keys
-from ..persistence import persist_scope
+from ..persistence import persist_scope, scoped_persist
+from ..sources.tables import normalize_parallelism
 
 ALL_TIERS = ("exact", "minhash", "simhash", "substring")
+
+
+@dataclass(frozen=True)
+class InputContract:
+    """The columns of one input kind that the tiers and the accounting
+    read.  ``phash_col`` names a precomputed 64-bit SimHash column;
+    None means the SimHash tier hashes ``text_col`` with
+    ``simhash_from_text``.  ``payload`` builds the per-row size the
+    savings report sums."""
+
+    name: str
+    id_col: str
+    text_col: str
+    exact_cols: tuple[str, ...]
+    phash_col: str | None
+    payload: Callable[[], Column]
+
+
+IMAGES = InputContract("images", "image_id", "caption", ("bytes", "caption"),
+                       "phash", image_payload)
+DOCS = InputContract("docs", "doc_id", "text", ("text",), None,
+                     lambda: F.col("n_chars"))
 
 # Bumped whenever any stage's OUTPUT SCHEMA changes (e.g. r3 added the
 # bands column to minhash signatures): a checkpoint written under an
@@ -76,11 +107,11 @@ class PipelineResult:
 
 class _Checkpointer:
     def __init__(self, spark: SparkSession, out_dir: str | Path,
-                 cfg: DedupConfig, resume: bool):
+                 resume: bool, key: dict):
         self.spark = spark
         self.out = Path(out_dir)
-        self.cfg_fp = cfg.fingerprint()
         self.resume = resume
+        self.key = key
         self.metrics: list[dict] = []
 
     def _meta_path(self, stage: str) -> Path:
@@ -97,7 +128,7 @@ class _Checkpointer:
         if self.resume and meta_p.exists():
             meta = json.loads(meta_p.read_text())
             if (
-                meta.get("config_fp") == self.cfg_fp
+                meta.get("key") == self.key
                 and meta.get("complete")
                 and meta.get("schema_version") == CHECKPOINT_SCHEMA_VERSION
             ):
@@ -140,7 +171,7 @@ class _Checkpointer:
                 )
         meta_p.parent.mkdir(parents=True, exist_ok=True)
         meta_p.write_text(json.dumps(
-            {"config_fp": self.cfg_fp, "rows_out": rows, "complete": True,
+            {"key": self.key, "rows_out": rows, "complete": True,
              "schema_version": CHECKPOINT_SCHEMA_VERSION,
              "schema": out.schema.json()}
         ))
@@ -154,103 +185,140 @@ class _Checkpointer:
         self.spark.createDataFrame(pdf).write.mode("append").parquet(str(p))
 
 
+def check_tiers(tiers: tuple[str, ...]) -> None:
+    """Raise ValueError naming any tier outside ALL_TIERS."""
+    unknown = set(tiers) - set(ALL_TIERS)
+    if unknown:
+        raise ValueError(f"unknown tiers {sorted(unknown)}; valid: {ALL_TIERS}")
+
+
+def tier_builders(
+    df: DataFrame,
+    cfg: DedupConfig,
+    contract: InputContract,
+    n_rows: int,
+    stage: Callable[[str, Callable[[], DataFrame]], DataFrame],
+) -> dict[str, Callable[[], DataFrame]]:
+    """The four detector tiers over ``df``: tier name -> thunk returning
+    its (a, b) pairs.  ``stage(name, fn)`` runs one named step —
+    run_pipeline passes its checkpointer, ``plans.docs`` a scoped
+    persist.  The minhash and substring key tables are steps of their
+    own, so the expensive Arrow UDF runs once per tier and a resumed
+    run skips it entirely.  ``n_rows`` feeds the SimHash tier's
+    size-adaptive keying, so no tier runs a count of its own."""
+    c = contract
+
+    def exact() -> DataFrame:
+        return stage("pairs_exact", lambda: exact_pairs(df, c.id_col, c.exact_cols))
+
+    def minhash() -> DataFrame:
+        sigs = stage("sig_minhash", lambda: minhash_signatures(
+            df, cfg, c.id_col, c.text_col))
+        return stage("pairs_minhash", lambda: minhash_pairs(
+            df, cfg, c.id_col, c.text_col, sigs=sigs).select("a", "b"))
+
+    def simhash_pairs() -> DataFrame:
+        if c.phash_col is not None:
+            return phash_hamming_pairs(df, cfg, c.id_col, c.phash_col, n_rows=n_rows)
+        # persisted: the kernel output feeds the keying explode and
+        # both verify joins
+        hashes = scoped_persist(simhash_from_text(df, c.id_col, c.text_col))
+        return phash_hamming_pairs(hashes, cfg, "id", "simhash", n_rows=n_rows)
+
+    def simhash() -> DataFrame:
+        return stage("pairs_simhash", lambda: simhash_pairs().select("a", "b"))
+
+    def substring() -> DataFrame:
+        keys = stage("winnow_keys", lambda: winnow_keys(df, cfg, c.id_col, c.text_col))
+        return stage("pairs_substring", lambda: substring_pairs(
+            df, cfg, c.id_col, c.text_col, keys=keys).select("a", "b"))
+
+    return {"exact": exact, "minhash": minhash, "simhash": simhash,
+            "substring": substring}
+
+
 def run_pipeline(
     spark: SparkSession,
-    images: DataFrame,
+    df: DataFrame,
     out_dir: str | Path,
     cfg: DedupConfig = DEFAULT_CONFIG,
     tiers: tuple[str, ...] = ALL_TIERS,
     resume: bool = True,
+    contract: InputContract = IMAGES,
 ) -> PipelineResult:
-    unknown = set(tiers) - set(ALL_TIERS)
-    if unknown:
-        raise ValueError(f"unknown tiers {sorted(unknown)}; valid: {ALL_TIERS}")
-    ck = _Checkpointer(spark, out_dir, cfg, resume)
+    """Dedup ``df`` with the selected tiers, checkpointing every stage
+    under ``out_dir`` and writing ``out_dir/metrics``.
 
-    # Normalize input parallelism and cache: every tier scans the images
-    # table, and a single-file parquet input would otherwise cap the
-    # whole pipeline at a handful of input splits.
-    from ..sources.tables import normalize_parallelism
+    ``contract`` says which columns the tiers and the accounting read:
+    ``IMAGES`` (the default) for an image+caption table, ``DOCS`` for a
+    ``read_documents`` corpus.
 
-    images = normalize_parallelism(images).persist()
-    # materialize the cache AND capture the row count once: the phash
-    # tier's auto keying scheme needs it, and counting here means no
-    # tier ever runs a plan-build-time df.count() of its own
-    n_images = images.count()
+    With ``resume`` a stage whose checkpoint meta matches the resume
+    key — the config fingerprint, the contract name and the sorted tier
+    set — is re-read instead of recomputed.  The input's identity is
+    NOT part of the key: a different input written to the same
+    ``out_dir`` resumes the old results, so give each input its own
+    ``out_dir`` or pass ``resume=False``.
+    """
+    check_tiers(tiers)
+    ck = _Checkpointer(spark, out_dir, resume, {
+        "config_fp": cfg.fingerprint(), "contract": contract.name,
+        "tiers": sorted(set(tiers)),
+    })
 
-    # The four tiers are INDEPENDENT jobs over the same cached input, so
-    # they run from a small driver thread pool (guide §2.6): each tier's
-    # tail of straggler tasks is back-filled by the next tier's work
-    # instead of leaving most cores idle, and the one-time JVM/codegen/
-    # Python-worker warm-up of one tier overlaps another tier's compute
-    # (measured: warm tier-stage sum ~14.9 s sequential vs ~max-chain
-    # wall overlapped; cold first-run wins are larger because every
-    # tier's JIT warm-up was serialized).  Correctness is unaffected:
-    # each stage writes its own checkpoint table, persist scopes are
-    # per-thread (persistence.py), and FIFO scheduling keeps the
-    # earlier-submitted tier's tasks first in line.
-    def _tier_exact() -> DataFrame:
-        return ck.stage("pairs_exact", lambda: exact_pairs(images))
+    with persist_scope():
+        # Normalize input parallelism and cache: every tier scans the input
+        # table, and a single-file parquet input would otherwise cap the
+        # whole pipeline at a handful of input splits.  The scope releases
+        # the cache even when a stage throws.
+        df = scoped_persist(normalize_parallelism(df))
+        # materialize the cache AND capture the row count once: the SimHash
+        # tier's auto keying scheme needs it, and counting here means no
+        # tier ever runs a plan-build-time df.count() of its own
+        n_rows = df.count()
 
-    def _tier_minhash() -> DataFrame:
-        # signatures are their own checkpoint: the expensive Arrow UDF
-        # runs exactly once, and a resumed run skips it entirely
-        sigs = ck.stage("sig_minhash", lambda: minhash_signatures(images, cfg))
-        return ck.stage(
-            "pairs_minhash",
-            lambda: minhash_pairs(images, cfg, sigs=sigs).select("a", "b"),
+        # The four tiers are INDEPENDENT jobs over the same cached input, so
+        # they run from a small thread pool: each tier's tail of straggler
+        # tasks is back-filled by the next tier's work
+        # instead of leaving most cores idle, and the one-time JVM/codegen/
+        # Python-worker warm-up of one tier overlaps another tier's compute
+        # (measured: warm tier-stage sum ~14.9 s sequential vs ~max-chain
+        # wall overlapped; cold first-run wins are larger because every
+        # tier's JIT warm-up was serialized).  Correctness is unaffected:
+        # each stage writes its own checkpoint table, persist scopes are
+        # per-thread (persistence.py), and FIFO scheduling keeps the
+        # earlier-submitted tier's tasks first in line.
+        tier_fns = tier_builders(df, cfg, contract, n_rows, ck.stage)
+        active = [t for t in ALL_TIERS if t in tiers]
+        tier_dfs: dict[str, DataFrame] = {}
+        if len(active) > 1:
+            from concurrent.futures import ThreadPoolExecutor
+
+            from pyspark import inheritable_thread_target
+
+            # submit the longest chain (minhash: two chained stages) first
+            # so FIFO gives it executors first — it is the critical path
+            order = sorted(active, key=lambda t: t != "minhash")
+            with ThreadPoolExecutor(max_workers=len(order)) as pool:
+                futs = {
+                    t: pool.submit(inheritable_thread_target(spark)(tier_fns[t]))
+                    for t in order
+                }
+                tier_dfs = {t: futs[t].result() for t in active}
+        elif active:
+            tier_dfs = {active[0]: tier_fns[active[0]]()}
+
+        pairs = ck.stage("pairs_union", lambda: union_pairs(**tier_dfs), lineage=True)
+        labels = ck.stage(
+            "cc_labels", lambda: connected_components(pairs, cfg), lineage=True
         )
-
-    def _tier_simhash() -> DataFrame:
-        return ck.stage(
-            "pairs_simhash",
-            lambda: phash_hamming_pairs(
-                images, cfg, n_rows=n_images
-            ).select("a", "b"),
+        asg = ck.stage(
+            "assignments",
+            lambda: assignments_from_labels(df, labels, contract.id_col),
+            lineage=True,
         )
-
-    def _tier_substring() -> DataFrame:
-        wkeys = ck.stage("winnow_keys", lambda: winnow_keys(images, cfg))
-        return ck.stage(
-            "pairs_substring",
-            lambda: substring_pairs(images, cfg, keys=wkeys).select("a", "b"),
-        )
-
-    tier_fns = {
-        "exact": _tier_exact,
-        "minhash": _tier_minhash,
-        "simhash": _tier_simhash,
-        "substring": _tier_substring,
-    }
-    active = [t for t in ALL_TIERS if t in tiers]
-    tier_dfs: dict[str, DataFrame] = {}
-    if len(active) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        # submit the longest chain (minhash: two chained stages) first
-        # so FIFO gives it executors first — it is the critical path
-        order = sorted(active, key=lambda t: t != "minhash")
-        with ThreadPoolExecutor(max_workers=len(order)) as pool:
-            futs = {
-                t: pool.submit(inheritable_thread_target(spark)(tier_fns[t]))
-                for t in order
-            }
-            tier_dfs = {t: futs[t].result() for t in active}
-    elif active:
-        tier_dfs = {active[0]: tier_fns[active[0]]()}
-
-    pairs = ck.stage("pairs_union", lambda: union_pairs(**tier_dfs), lineage=True)
-    labels = ck.stage(
-        "cc_labels", lambda: connected_components(pairs, cfg), lineage=True
-    )
-    asg = ck.stage(
-        "assignments", lambda: assignments_from_labels(images, labels), lineage=True
-    )
-    pay = payload_bytes(images)
-    sav = ck.stage("savings", lambda: savings(asg, pay))
-    ratio = dedup_ratio(asg, pay)
-    ck.write_metrics()
-    images.unpersist()
+        pay = payload_bytes(df, contract.id_col, contract.payload)
+        sav = ck.stage("savings", lambda: savings(asg, pay, contract.id_col))
+        ratio = dedup_ratio(asg, pay, contract.id_col)
+        ck.write_metrics()
     return PipelineResult(asg, sav, ratio, pairs, ck.metrics)

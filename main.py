@@ -58,94 +58,68 @@ def parse_args(argv=None):
     return p.parse_args(argv)
 
 
-def run_docs_mode(spark, args) -> dict:
-    """Document-corpus dedup: read_documents (any format) → the full
-    tiered pair union (exact/minhash/simhash/substring, --tiers
-    selectable, priority election) → connected components →
-    assignments + character-savings accounting, written under
-    --output.  The text analog of the image pipeline's report — a
-    captions-only corpus gets the same detector chain the image table
-    gets (reference: /root/reference/Test/Testbench.cpp:81-123)."""
+def run_docs_mode(spark, args, resume: bool = True) -> dict:
+    """Document-corpus dedup through the same orchestrator as images
+    mode: read_documents (any format) → run_pipeline with the DOCS
+    contract (--tiers selectable; checkpoints, resume and the metrics
+    table under --output) → the optional quality election →
+    <output>/assignments → the optional split → the character-savings
+    report over the final assignments."""
     from pyspark.sql import functions as F
 
     from deduplication_and_compression_spark.config import DEFAULT_CONFIG
     from deduplication_and_compression_spark.operators.assign import (
-        assignments_from_labels,
+        dedup_ratio, payload_bytes,
     )
-    from deduplication_and_compression_spark.operators.components import (
-        connected_components,
+    from deduplication_and_compression_spark.plans.pipeline import (
+        DOCS, run_pipeline,
     )
-    from deduplication_and_compression_spark.persistence import (
-        persist_scope, scoped_persist,
-    )
-    from deduplication_and_compression_spark.plans.docs import docs_tier_pairs
-    from deduplication_and_compression_spark.sources.tables import (
-        normalize_parallelism, read_documents,
-    )
+    from deduplication_and_compression_spark.sources.tables import read_documents
 
     out = Path(args.output)
-    with persist_scope():
-        # scoped: released on scope exit even if the write/collect
-        # throws (a bare persist + manual unpersist leaked on error)
-        docs = scoped_persist(normalize_parallelism(
-            read_documents(spark, args.input, fmt=args.format)
-        ))
-        # materialize the cache and capture the count once: every tier
-        # scans the corpus, and the SimHash tier's size-adaptive keying
-        # needs the row count without an action of its own
-        n_docs = docs.count()
-        pairs = docs_tier_pairs(
-            docs, DEFAULT_CONFIG, tiers=tuple(args.tiers.split(",")),
-            n_docs=n_docs,
-        ).select("a", "b")
-        labels = connected_components(pairs, DEFAULT_CONFIG)
-        asg = assignments_from_labels(docs, labels, id_col="doc_id")
-        if args.rep_policy == "quality":
-            from deduplication_and_compression_spark.operators.assign import (
-                elect_representatives,
-            )
-            from deduplication_and_compression_spark.operators.textops import (
-                quality_scores,
-            )
-
-            scores = quality_scores(docs).select("doc_id", "quality_bp")
-            asg = elect_representatives(
-                asg, scores, id_col="doc_id", score_col="quality_bp"
-            ).withColumnRenamed("rep_id", "representative_id")
-        asg.write.mode("overwrite").parquet(str(out / "assignments"))
-        asg = spark.read.parquet(str(out / "assignments"))
-        split_counts = None
-        if args.emit_split is not None:
-            from deduplication_and_compression_spark.operators.assign import (
-                leakage_safe_split,
-            )
-
-            split = leakage_safe_split(
-                asg, frac_train=args.emit_split, id_col="doc_id"
-            )
-            split.write.mode("overwrite").parquet(str(out / "split"))
-            split_counts = {
-                r["split"]: r["n"]
-                for r in spark.read.parquet(str(out / "split"))
-                .groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-        stats = (
-            asg.join(docs.select("doc_id", "n_chars"), "doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("rows_total"),
-                F.sum((~F.col("is_duplicate")).cast("int")).alias("rows_unique"),
-                F.sum("n_chars").alias("chars_total"),
-                F.sum(F.when(F.col("is_duplicate"), F.col("n_chars"))
-                      .otherwise(F.lit(0))).alias("chars_dupes"),
-            )
-            .collect()[0]
+    docs = read_documents(spark, args.input, fmt=args.format)
+    asg = run_pipeline(
+        spark, docs, out, DEFAULT_CONFIG, tiers=tuple(args.tiers.split(",")),
+        resume=resume, contract=DOCS,
+    ).assignments
+    if args.rep_policy == "quality":
+        from deduplication_and_compression_spark.operators.assign import (
+            elect_representatives,
         )
+        from deduplication_and_compression_spark.operators.textops import (
+            quality_scores,
+        )
+
+        scores = quality_scores(docs).select("doc_id", "quality_bp")
+        asg = elect_representatives(
+            asg, scores, id_col="doc_id", score_col="quality_bp"
+        ).withColumnRenamed("rep_id", "representative_id")
+    asg.write.mode("overwrite").parquet(str(out / "assignments"))
+    asg = spark.read.parquet(str(out / "assignments"))
+    split_counts = None
+    if args.emit_split is not None:
+        from deduplication_and_compression_spark.operators.assign import (
+            leakage_safe_split,
+        )
+
+        split = leakage_safe_split(
+            asg, frac_train=args.emit_split, id_col="doc_id"
+        )
+        split.write.mode("overwrite").parquet(str(out / "split"))
+        split_counts = {
+            r["split"]: r["n"]
+            for r in spark.read.parquet(str(out / "split"))
+            .groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+    ratio = dedup_ratio(
+        asg, payload_bytes(docs, DOCS.id_col, DOCS.payload), DOCS.id_col
+    ).collect()[0]
     # sums are NULL on an empty corpus — report zeros, not a TypeError
-    chars_total = int(stats["chars_total"] or 0)
-    chars_saved = int(stats["chars_dupes"] or 0)
+    chars_total = int(ratio["bytes_total"] or 0)
+    chars_saved = chars_total - int(ratio["bytes_after_dedup"] or 0)
     report = {
-        "rows_total": stats["rows_total"],
-        "rows_unique": int(stats["rows_unique"] or 0),
+        "rows_total": ratio["rows_total"],
+        "rows_unique": int(ratio["rows_unique"] or 0),
         "chars_total": chars_total,
         "chars_saved": chars_saved,
         "dedup_pct": round(100.0 * chars_saved / max(1, chars_total), 3),
@@ -168,19 +142,13 @@ def main(argv=None) -> None:
     active = SparkSession.getActiveSession()
     spark = active or build_session(app_name="dedup-pipeline", cores=args.cores)
     if args.mode == "docs":
-        # loud rejection beats a silent no-op: docs mode has no
-        # checkpoint stages, so a user passing --no-resume would
-        # believe resume existed to disable
-        if args.no_resume:
-            raise ValueError("--no-resume applies to --mode images only "
-                             "(docs mode always recomputes and overwrites)")
         t0 = time.perf_counter()
-        report = run_docs_mode(spark, args)
+        report = run_docs_mode(spark, args, resume=not args.no_resume)
         report["wall_sec"] = round(time.perf_counter() - t0, 1)
         print(json.dumps(report))
         return
-    # loud rejections (the --no-resume precedent, inverted): these
-    # stages run over the document contract only
+    # loud rejections beat a silent no-op: these stages run over the
+    # document contract only
     if args.emit_split is not None:
         raise ValueError("--emit-split applies to --mode docs only")
     if args.rep_policy != "first":

@@ -116,21 +116,73 @@ def test_cli_docs_mode_tier_selection(spark, tmp_path, capsys, tiers,
 
 def test_cli_docs_mode_rejects_unknown_tier(spark, tmp_path):
     src = _write_docs_corpus(tmp_path)
-    with pytest.raises(ValueError, match="unknown doc tiers"):
+    with pytest.raises(ValueError, match="unknown tiers"):
         cli.main(["--mode", "docs", "--input", str(src), "--format", "json",
                   "--output", str(tmp_path / "bad"), "--tiers", "exact,bogus"])
 
 
-def test_cli_docs_mode_empty_corpus_and_flag_rejection(spark, tmp_path, capsys):
-    src = tmp_path / "empty.txt"
-    src.write_text("")
-    cli.main(["--mode", "docs", "--input", str(src), "--format", "text",
-              "--output", str(tmp_path / "eo")])
-    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert report["rows_total"] == 0 and report["chars_saved"] == 0
-    with pytest.raises(ValueError, match="--no-resume applies"):
+def test_cli_docs_mode_empty_corpus_and_no_resume(spark, tmp_path, capsys):
+    """An empty corpus and a corpus of empty lines report zeros (a zero
+    character total is no divide-by-zero); --no-resume is accepted."""
+    for body, rows, extra in (("", 0, []), ("", 0, ["--no-resume"]),
+                              ("\n\n\n", 3, ["--no-resume"])):
+        src = tmp_path / f"corpus{rows}.txt"
+        src.write_text(body)
         cli.main(["--mode", "docs", "--input", str(src), "--format", "text",
-                  "--output", str(tmp_path / "eo3"), "--no-resume"])
+                  "--output", str(tmp_path / f"eo{rows}"), *extra])
+        report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert report["rows_total"] == rows and report["chars_saved"] == 0
+        assert report["chars_total"] == 0 and report["dedup_pct"] == 0.0
+
+
+DOC_TIER_STAGES = ("pairs_exact", "sig_minhash", "pairs_minhash",
+                   "pairs_simhash", "winnow_keys", "pairs_substring")
+
+
+def _docs_main(src, out_dir, *extra):
+    cli.main(["--mode", "docs", "--input", str(src), "--format", "json",
+              "--output", str(out_dir), *extra])
+
+
+def test_cli_docs_mode_writes_metrics_and_checkpoints(spark, tmp_path, capsys):
+    """Docs mode runs through run_pipeline: every stage leaves a
+    checkpoint table and a row in <output>/metrics."""
+    src = _write_docs_corpus(tmp_path)
+    out_dir = tmp_path / "docs_metrics"
+    _docs_main(src, out_dir)
+    stages = {r["stage"] for r in spark.read.parquet(str(out_dir / "metrics"))
+              .where("partition_id = -1").collect()}
+    after = ("pairs_union", "cc_labels", "assignments", "savings")
+    assert set(DOC_TIER_STAGES + after) <= stages, stages
+    for stage in DOC_TIER_STAGES + after:
+        assert (out_dir / f"chk_{stage}" / "_dedup_meta.json").exists(), stage
+
+
+def test_cli_docs_mode_resume_equals_single_shot(spark, tmp_path, capsys):
+    """Dropping the cc_labels and assignments metas makes a rerun
+    recompute those two stages from the resumed tier stages; the
+    assignments and the report must match the first run."""
+    src = _write_docs_corpus(tmp_path)
+    out_dir = tmp_path / "docs_resume"
+
+    def run():
+        _docs_main(src, out_dir, "--rep-policy", "quality")
+        report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        report.pop("wall_sec")
+        asg = spark.read.parquet(str(out_dir / "assignments")).toPandas()
+        return report, asg.sort_values("doc_id").reset_index(drop=True)
+
+    report1, asg1 = run()
+    for stage in ("cc_labels", "assignments"):
+        (out_dir / f"chk_{stage}" / "_dedup_meta.json").unlink()
+    report2, asg2 = run()
+    assert report1 == report2
+    assert asg1.equals(asg2)
+    rows = (spark.read.parquet(str(out_dir / "metrics"))
+            .where("partition_id = -1").toPandas())
+    resumed = set(rows.loc[rows["resumed"], "stage"])
+    assert set(DOC_TIER_STAGES) | {"pairs_union"} <= resumed
+    assert not {"cc_labels", "assignments"} & resumed
 
 
 def test_cli_docs_mode_split_and_quality_reps(spark, tmp_path, capsys):

@@ -182,6 +182,28 @@ def test_resume_invalidated_by_config_change(spark, images_df, cfg, pipe_result)
     assert not stage_m[0]["resumed"]
 
 
+def test_resume_keyed_on_tier_set(spark, images_df, cfg, tmp_path_factory):
+    """A run with a different tier set must not resume the previous
+    run's union, labels or assignments: exact-only then exact+minhash
+    into one directory equals exact+minhash in a fresh one."""
+    out = tmp_path_factory.mktemp("tierkey")
+    both = ("exact", "minhash")
+
+    def unique(res):
+        return res.assignments.where("NOT is_duplicate").count()
+
+    exact_only = unique(run_pipeline(spark, images_df, out, cfg, tiers=("exact",)))
+    res = run_pipeline(spark, images_df, out, cfg, tiers=both)
+    fresh = run_pipeline(spark, images_df, tmp_path_factory.mktemp("tierkey_fresh"),
+                         cfg, tiers=both, resume=False)
+    assert unique(fresh) < exact_only  # minhash finds clusters exact misses
+    union = [m for m in res.metrics if m["stage"] == "pairs_union"]
+    assert not union[0]["resumed"]
+    a1 = res.assignments.toPandas().sort_values("image_id").reset_index(drop=True)
+    a2 = fresh.assignments.toPandas().sort_values("image_id").reset_index(drop=True)
+    assert a1.equals(a2)
+
+
 def test_metrics_lineage_written(pipe_result, spark):
     _, out = pipe_result
     m = spark.read.parquet(str(out / "metrics"))
